@@ -30,11 +30,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * codegen, and execution — an action on the memoized frame replans and
   * re-executes in full; only CONSTRUCTION is cached. Serving-store
   * generations are fingerprint-keyed by the same corpus bytes this
-  * stamp covers, so a memoized plan can only go stale through an
-  * in-place store maintenance op (compaction rewrites live paths under
-  * an unchanged corpus); those sites call [[invalidate]] — and the
-  * exposure is loud (FileNotFound), never wrong data, the documented
-  * reader-vs-compact contract. */
+  * stamp covers; the one commit the stamp cannot see is a new
+  * generation under an UNCHANGED fingerprint (a compaction, a forced
+  * rebuild), and [[graft.operators.ServingStore]] calls [[invalidate]]
+  * on it. A plan memoized before such a commit keeps reading the
+  * previous generation, which stays on disk for one more commit — it
+  * serves identical rows, it does not fail. */
 object PlanCache {
   /** Upper bound on sessions with retained plans; evicting the eldest
     * drops the only cache-side strong reference to that session. */
@@ -139,9 +140,9 @@ object PlanCache {
       }
     }
 
-  /** Drop every memoized plan — called by in-place store maintenance
-    * (compaction, forced rebuilds) whose live-path rewrites a
-    * corpus-stamp guard cannot see. */
+  /** Drop every memoized plan — called when a serving store commits a
+    * new generation under an unchanged fingerprint (compaction, forced
+    * rebuilds), which a corpus-stamp guard cannot see. */
   def invalidate(): Unit = {
     memo.synchronized {
       val it = memo.values().iterator()

@@ -207,26 +207,17 @@ object QualityModel {
   private[graft] def lrServePath(dir: String): String =
     Similarity.servePath("lr_serve_", dir)
 
-  /** Persist weights + the documents-table fingerprint: rows (pos >= 0,
-    * w) are weights in FeatNames order; pos -2 / -3 carry the unsigned
-    * low / high 32-bit fingerprint halves (one double cannot hold 64
-    * bits exactly). */
-  private[graft] def writeLrModel(spark: SparkSession, path: String,
-      w: Array[Double], fp: Long): Unit = {
+  /** Persist weights: rows (pos, w) in FeatNames order. */
+  private def writeLrModel(spark: SparkSession, path: String, w: Array[Double]): Unit = {
     import spark.implicits._
-    (w.zipWithIndex.map { case (x, j) => (j, x) } ++
-      Seq((-2, (fp & 0xFFFFFFFFL).toDouble), (-3, (fp >>> 32).toDouble)))
-      .toSeq.toDF("pos", "w")
+    w.zipWithIndex.map { case (x, j) => (j, x) }.toSeq.toDF("pos", "w")
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  private[graft] def readLrModel(spark: SparkSession, path: String)
-      : (Array[Double], Long) = {
+  private[graft] def readLrModel(spark: SparkSession, path: String): Array[Double] = {
     val rows = spark.read.parquet(path).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val w = Array.tabulate(FeatNames.length)(j =>
+    Array.tabulate(FeatNames.length)(j =>
       rows.getOrElse(j, sys.error(s"missing weight $j in $path")))
-    val fp = (rows(-3).toLong << 32) | rows(-2).toLong
-    (w, fp)
   }
 
   /** q_quality_classifier SERVING path: score with the persisted
@@ -243,26 +234,14 @@ object QualityModel {
     * half of [[qualityClassifierServe]], shared with the streaming
     * gate's served binding ([[graft.streaming.IngestGate.sinkServed]])
     * so batch scoring and the stream score with the SAME generation. */
-  private[graft] def serveWeights(spark: SparkSession, dir: String): Array[Double] = {
-    val path = lrServePath(dir)
-    val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-    val stored =
-      try Some(readLrModel(spark, path))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          Similarity.warnUnreadableSidecar("quality-classifier", path, e)
-          None
-      }
-    stored match {
-      case Some((ws, storedFp)) if storedFp == fp => ws
-      case _ =>
-        // the fingerprint mismatch proves the files changed — drop the
-        // memoized plan so training reads the CURRENT listing, not one
-        // pinned to deleted part files
-        Tables.invalidate(spark, dir, "documents")
-        val ws = fitQualityLr(featureFrame(Tables.documents(spark, dir)))
-        writeLrModel(spark, path, ws, fp)
-        ws
-    }
-  }
+  private[graft] def serveWeights(spark: SparkSession, dir: String): Array[Double] =
+    ServingStore.serve(spark, "quality-classifier", lrServePath(dir),
+      Similarity.corpusFingerprint(spark, dir, "documents.parquet"), ServingStore.Flat,
+      force = false) { g =>
+      // a rebuild proves the files changed — drop the memoized plan so
+      // training reads the CURRENT listing, not one pinned to deleted
+      // part files
+      Tables.invalidate(spark, dir, "documents")
+      writeLrModel(spark, g.dir, fitQualityLr(featureFrame(Tables.documents(spark, dir))))
+    }(g => readLrModel(spark, g.dir))
 }

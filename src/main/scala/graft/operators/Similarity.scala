@@ -192,40 +192,22 @@ object Similarity {
     * (ground truth is computed once and versioned with the corpus, e.g.
     * the published BIGANN GT files), NOT a per-query brute scan. */
   private[graft] def ensureGroundTruth(spark: SparkSession, dir: String,
-      k: Int = KnnK): DataFrame = {
-    val path = gtServePath(dir, k)
-    val fpPath = path + "_model"
-    val fp = corpusFingerprint(spark, dir)
-    val storedFp =
-      try Some(readSidecarRows(spark, fpPath)(0).getLong(0))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("ground-truth", fpPath, e)
-          None
-      }
-    if (!storedFp.contains(fp)) ServingStore.withBuildLock(path) {
-      // re-probe under the lock: a waiting loser serves the winner's
-      // ground truth instead of overwriting it (live-path store, r15)
-      val again =
-        try Some(readSidecarRows(spark, fpPath)(0).getLong(0))
-        catch { case e if scala.util.control.NonFatal(e) => None }
-      if (!again.contains(fp)) {
-        Tables.invalidate(spark, dir, "embeddings")
-        knnBrute(spark, dir, k).write.mode("overwrite").parquet(path)
-        spark.range(1).select(lit(fp).as("fp"))
-          .coalesce(1).write.mode("overwrite").parquet(fpPath)
+      k: Int = KnnK): DataFrame =
+    ServingStore.serve(spark, "ground-truth", gtServePath(dir, k), corpusFingerprint(spark, dir),
+      ServingStore.Flat, force = false) { g =>
+      Tables.invalidate(spark, dir, "embeddings")
+      knnBrute(spark, dir, k).write.mode("overwrite").parquet(g.dir)
+    } { g =>
+      // GT is (queries × k) rows — driver-sized by construction, so serve
+      // it RESIDENT as a LocalRelation: the per-serve broadcast then costs
+      // no scan job at all (same discipline as the model artifacts)
+      val rows = spark.read.parquet(g.dir).collect()
+      if (rows.isEmpty) spark.read.parquet(g.dir)
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.toSeq.asJava, rows.head.schema)
       }
     }
-    // GT is (queries × k) rows — driver-sized by construction, so serve
-    // it RESIDENT as a LocalRelation: the per-serve broadcast then costs
-    // no scan job at all (same discipline as the model sidecars)
-    val rows = readSidecarRows(spark, path)
-    if (rows.isEmpty) spark.read.parquet(path)
-    else {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.toSeq.asJava, rows.head.schema)
-    }
-  }
 
   /** Append a per-query `recall_at_k` column to an approximate top-k
     * result: |approx ∩ brute-top-k| / k against the persisted ground
@@ -604,8 +586,8 @@ object Similarity {
     * partition-invariant, no sort), and it never engages below
     * 256 x nList vectors — every shipped SF and pin corpus trains
     * unsampled, so this is purely the capital-cost bound for the
-    * clamped-k regime (StressR13b's 103 s assignment-store build at
-    * 200k x 4096 cells is the row it exists for). */
+    * clamped-k regime (a 200k-vector corpus at 4096 cells measured a
+    * 103 s assignment-store build unsampled). */
   val MaxFitPointsPerCentroid = 256
 
   def ivfFit(corpus: DataFrame, nList: Int = IvfNList, iters: Int = IvfIters,
@@ -672,54 +654,25 @@ object Similarity {
     * training is amortized over every search instead of paid per call
     * (training from scratch inside the query was measuring index BUILD,
     * not search). The index generation is keyed by a FINGERPRINT of the
-    * corpus files' metadata (names, lengths, modification times — a
-    * driver-side listing, no data scan), persisted in the model sidecar:
+    * corpus files' content (a driver-side read of sampled windows, no
+    * data scan), stamped in the store's sidecar:
     * any corpus swap under the same dir changes the fingerprint and
     * triggers a rebuild — including an equal-row-count content swap,
     * which a count-based key would silently serve stale. Results are
     * bit-identical to [[knnIvf]] either way (same deterministic Lloyd
     * fit, and the persisted f64 model round-trips exactly through
-    * parquet). The freshness probe is ONE sidecar read whose centroids
-    * are reused for the search itself. */
+    * parquet). The decoded centroids stay resident per generation
+    * ([[ServingStore.serve]]'s memo) and drive the search itself. */
   def knnIvfServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = ivfServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readIvfModelFull(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("ivf", ivfModelPath(indexPath), e)
-          None
-      }
-    val centroids = stored match {
-      case Some((cents, _, Some(storedFp))) if storedFp == fp => cents
-      case _ => ServingStore.withBuildLock(indexPath) {
-        // re-probe under the lock (live-path store, r15): a waiting
-        // loser serves the winner's index instead of overwriting it
-        (try Some(readIvfModelFull(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((cents, _, Some(f2))) if f2 == fp => cents
-          case _ =>
-            // mismatch proves the corpus files changed: drop the
-            // memoized plan so the rebuild reads the current listing
-            Tables.invalidate(spark, dir, "embeddings")
-            writeIvfIndexOf(spark, emb(spark, dir), indexPath, fingerprint = Some(fp))
-        }
-      }
-    }
-    withRecall(knnIvfIndexed(spark, dir, indexPath, centroids, k), spark, dir, k)
+    val (g, centroids) = ServingStore.serve(spark, "ivf", ivfServePath(dir),
+      corpusFingerprint(spark, dir), IvfParts, force = false) { g =>
+      // a rebuild proves the corpus files changed: drop the memoized
+      // plan so it reads the current listing
+      Tables.invalidate(spark, dir, "embeddings")
+      buildIvf(spark, emb(spark, dir), g, IvfNList)
+    }(g => (g, decodeModelRows(modelRows(spark, g))._1))
+    withRecall(knnIvfLists(spark, dir, g("lists"), centroids, k), spark, dir, k)
   }
-
-  /** Serve paths fall back to a rebuild when a model sidecar cannot be
-    * read; that is correct for "no generation yet" but must be
-    * OBSERVABLE when the cause is IO/permissions/corruption — otherwise
-    * a persistent error degrades into a silent full retrain on every
-    * call. Warns only when something exists at the path (absence is the
-    * normal cold start). */
-  private[graft] def warnUnreadableSidecar(what: String, path: String, e: Throwable): Unit =
-    if (new java.io.File(path).exists())
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"$what model sidecar at $path unreadable; rebuilding", e)
 
   /** Driver-side CONTENT fingerprint of a corpus table's parquet (file
     * names, lengths, and a CRC of each file's head, six evenly-spaced
@@ -887,181 +840,124 @@ object Similarity {
       nList: Int = IvfNList): Array[Array[Double]] =
     writeIvfIndexOf(spark, emb(spark, dir), indexPath, nList)
 
-  /** Frame-based core of [[writeIvfIndex]] — the index lifecycle specs
-    * build indexes over corpus subsets through it. */
+  /** Frame-based core of [[writeIvfIndex]]: a NEW generation of the
+    * index store at `indexPath` — the index lifecycle specs build
+    * indexes over corpus subsets through it. Such an index is keyed by
+    * no corpus: its stamp is [[Unkeyed]]. */
   private[graft] def writeIvfIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, nList: Int = IvfNList,
-      fingerprint: Option[Long] = None): Array[Array[Double]] = {
+      indexPath: String, nList: Int = IvfNList): Array[Array[Double]] =
+    ServingStore.serve(spark, "ivf", indexPath, Unkeyed, IvfParts, force = true)(
+      buildIvf(spark, corpus, _, nList))(g => decodeModelRows(modelRows(spark, g))._1)
+
+  /** Stamp of an index store built over a frame rather than a corpus dir. */
+  private[graft] val Unkeyed = 0L
+
+  // ------------------------------------ IVF index lifecycle (model, append, refresh)
+
+  /** An ANN generation: the index rows (`lists`: inverted lists
+    * partitioned by `cid`; `codes` for the flat PQ family) plus its
+    * MODEL STATE (`model`) — trained centroids, codebooks, rotation and
+    * the corpus size at training time, as (cid, pos, w) rows — inside
+    * the same generation, so model and rows can never come from two
+    * builds. */
+  private[graft] val IvfParts =
+    ServingStore.Layout(Seq(ServingStore.plain("lists"), ServingStore.plain("model")))
+  private[graft] val CodesParts =
+    ServingStore.Layout(Seq(ServingStore.plain("codes"), ServingStore.plain("model")))
+
+  private def buildIvf(spark: SparkSession, corpus: DataFrame, g: ServingStore.Generation,
+      nList: Int): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val centroids = ivfFit(corpus, nList)
     corpus
       .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
-      .write.mode("overwrite").partitionBy("cid").parquet(indexPath)
-    writeIvfModel(spark, indexPath, centroids, corpus.count(), fingerprint)
-    centroids
+      .write.mode("overwrite").partitionBy("cid").parquet(g("lists"))
+    writeIvfModel(spark, g("model"), centroids, corpus.count())
   }
 
-  // ------------------------------------ IVF index lifecycle (model, append, refresh)
-
-  /** Sibling path holding the index's MODEL STATE (trained centroids +
-    * the corpus size at training time) as parquet — sibling, not nested,
-    * so the partitioned inverted-list reader never sees non-partition
-    * files. */
-  private[graft] def ivfModelPath(indexPath: String): String =
-    indexPath.stripSuffix("/") + "_model"
-
-  /** Row (cid = -1, pos = 0) carries the trained-count; rows (cid = -2,
-    * pos = 0/1) carry the corpus fingerprint's unsigned 32-bit halves
-    * (each half is exact in a double; one double cannot hold 64 bits);
-    * real centroid weights are (cid >= 0, pos, w). Counts are exact in a
-    * double below 2^53 — far beyond any vector count this index
-    * addresses. */
-  private[graft] def writeIvfModel(spark: SparkSession, indexPath: String,
-      centroids: Array[Array[Double]], trainedCount: Long,
-      fingerprint: Option[Long] = None): Unit = {
+  /** Row (cid = -1, pos = 0) carries the trained-count; real centroid
+    * weights are (cid >= 0, pos, w). Counts are exact in a double below
+    * 2^53 — far beyond any vector count this index addresses. */
+  private[graft] def writeIvfModel(spark: SparkSession, modelDir: String,
+      centroids: Array[Array[Double]], trainedCount: Long): Unit = {
     import spark.implicits._
     val rows = centroids.zipWithIndex.flatMap { case (c, i) =>
       c.zipWithIndex.map { case (w, p) => (i, p, w) }
-    }.toSeq ++ Seq((-1, 0, trainedCount.toDouble)) ++
-      fingerprint.toSeq.flatMap(fp => Seq(
-        (-2, 0, (fp & 0xFFFFFFFFL).toDouble),
-        (-2, 1, (fp >>> 32).toDouble)))
+    }.toSeq ++ Seq((-1, 0, trainedCount.toDouble))
     rows.toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("overwrite").parquet(ivfModelPath(indexPath))
+      .coalesce(1).write.mode("overwrite").parquet(modelDir)
   }
 
-  /** (centroids, trainedCount) persisted next to a materialized index. */
-  def readIvfModel(spark: SparkSession, indexPath: String): (Array[Array[Double]], Long) = {
-    val (cents, n, _) = readIvfModelFull(spark, indexPath)
-    (cents, n)
-  }
-
-  /** [[readIvfModel]] plus the build-time corpus fingerprint (None for
-    * sidecars written without one). */
-  private[graft] def readIvfModelFull(spark: SparkSession, indexPath: String)
-      : (Array[Array[Double]], Long, Option[Long]) =
-    decodeModelRows(readModelRows(spark, indexPath))
-
-  /** Driver-side sidecar cache, keyed by the sidecar directory's file
-    * listing (names + lengths + mtimes — the [[corpusFingerprint]]
-    * fold). A serving system keeps its index models RESIDENT; without
-    * this every query paid a Spark job to re-collect an unchanged
-    * model. Any rewrite changes the listing (parquet part files carry
-    * fresh UUID names), so staleness is structural, not TTL-based; a
-    * missing dir is never cached (the read throws to the caller's
-    * rebuild path exactly as before). */
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[org.apache.spark.sql.Row])]()
-
-  private def listingFingerprint(spark: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val statuses =
-      (if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq else Seq(fs.getFileStatus(p)))
-        .filter(_.isFile)
-        .sortBy(_.getPath.getName)
-    Some(statuses.foldLeft(1125899906842597L) { (h, s) =>
-      ((h * 31 + s.getPath.getName.hashCode) * 31 + s.getLen) * 31 + s.getModificationTime
-    })
-  }
-
-  /** Collect a small sidecar parquet through the resident cache. */
-  private[graft] def readSidecarRows(spark: SparkSession, path: String)
+  private def modelRows(spark: SparkSession, g: ServingStore.Generation)
       : Array[org.apache.spark.sql.Row] =
-    listingFingerprint(spark, path) match {
-      case None =>
-        sidecarCache.remove(path)
-        spark.read.parquet(path).collect() // throws the usual path-not-found
-      case Some(fp) =>
-        val cached = sidecarCache.get(path)
-        if (cached != null && cached._1 == fp) cached._2
-        else {
-          val rows = spark.read.parquet(path).collect()
-          sidecarCache.put(path, (fp, rows))
-          rows
-        }
-    }
+    spark.read.parquet(g("model")).collect()
 
-  /** ONE sidecar read, shared by the IVF decode and the PQ geometry
-    * probe — the freshness check stays a single Spark job (and a cache
-    * hit after the first serve of a generation). */
-  private[graft] def readModelRows(spark: SparkSession, indexPath: String)
-      : Array[org.apache.spark.sql.Row] =
-    readSidecarRows(spark, ivfModelPath(indexPath))
+  /** The stamped generation of an index store — maintenance reads it
+    * whatever its stamp. */
+  private def liveIndex(spark: SparkSession, what: String, indexPath: String,
+      layout: ServingStore.Layout): ServingStore.Generation =
+    ServingStore.live(spark, what, indexPath, layout).getOrElse(throw new IllegalStateException(
+      s"no stamped $what generation at $indexPath — build the index first"))
+
+  /** (centroids, trainedCount) of the live generation of an index store. */
+  def readIvfModel(spark: SparkSession, indexPath: String): (Array[Array[Double]], Long) =
+    decodeModelRows(modelRows(spark, liveIndex(spark, "ivf", indexPath, IvfParts)))
 
   private[graft] def decodeModelRows(rows: Array[org.apache.spark.sql.Row])
-      : (Array[Array[Double]], Long, Option[Long]) = {
+      : (Array[Array[Double]], Long) = {
     val trainedCount = rows.find(r => r.getInt(0) == -1)
       .map(_.getDouble(2).toLong)
-      .getOrElse(sys.error("no trained-count row in the model sidecar"))
-    val fpHalves = rows.filter(_.getInt(0) == -2)
-      .map(r => r.getInt(1) -> r.getDouble(2).toLong).toMap
-    val fingerprint =
-      for (lo <- fpHalves.get(0); hi <- fpHalves.get(1)) yield (hi << 32) | lo
+      .getOrElse(sys.error("no trained-count row in the model"))
     val cells = rows.filter(_.getInt(0) >= 0)
     val nList = cells.map(_.getInt(0)).max + 1
     val dim = cells.map(_.getInt(1)).max + 1
     val centroids = Array.fill(nList)(new Array[Double](dim))
     cells.foreach(r => centroids(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-    (centroids, trainedCount, fingerprint)
+    (centroids, trainedCount)
   }
 
   /** Append a batch of new vectors to a materialized index WITHOUT
     * retraining: each vector is assigned to its nearest existing centroid
-    * and written into that cid partition (parquet append creates new
-    * files inside the partition dirs — existing lists are never
-    * rewritten). Search over the appended index with the SAME quantizer is
-    * exactly search over the union corpus; recall degrades only as the
-    * data distribution drifts from the trained centroids, which
-    * [[refreshIvfIndexIfStale]] bounds. */
+    * and written into that cid partition of the live generation (parquet
+    * append creates new files inside the partition dirs — existing lists
+    * are never rewritten). Search over the appended index with the SAME
+    * quantizer is exactly search over the union corpus; recall degrades
+    * only as the data distribution drifts from the trained centroids,
+    * which [[refreshIvfIndexIfStale]] bounds. */
   def appendIvfIndex(spark: SparkSession, batch: DataFrame, indexPath: String): Unit = {
     GraftFunctions.ensureRegistered(spark)
-    // live-path mutation: serialize with rebuild/refresh/compaction (r15)
-    ServingStore.withBuildLock(indexPath) {
-      val (centroids, _) = readIvfModel(spark, indexPath)
+    ServingStore.appendInPlace(spark, "ivf", indexPath, IvfParts)(_.fp) { g =>
+      val (centroids, _) = decodeModelRows(modelRows(spark, g))
       batch
         .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
-        .write.mode("append").partitionBy("cid").parquet(indexPath)
+        .write.mode("append").partitionBy("cid").parquet(g("lists"))
     }
   }
 
-  /** Staleness-triggered retrain + compaction: when appended rows exceed
-    * `staleness` x the trained corpus size, retrain the quantizer over
-    * the FULL index contents (same deterministic Lloyd fit as the
-    * original build), rewrite the inverted lists under the new
-    * assignment, and persist the refreshed model. Returns true when a
-    * refresh ran. The rewrite goes through a sibling `_tmp` generation
-    * plus delete-and-rename swap (the index is eagerly checkpointed off
-    * the old files first); a production deployment would keep multiple
-    * generations and swap a pointer instead — same shape, atomic for
-    * concurrent readers. */
+  /** Staleness-triggered retrain: when appended rows exceed `staleness`
+    * x the trained corpus size, retrain the quantizer over the FULL
+    * index contents (same deterministic Lloyd fit as the original
+    * build) and rewrite the inverted lists under the new assignment —
+    * a NEW generation under the unchanged stamp
+    * ([[ServingStore.compact]]), so readers of the old lists keep them
+    * for one cycle. Returns true when a refresh ran. */
   def refreshIvfIndexIfStale(spark: SparkSession, indexPath: String,
       staleness: Double = 0.5, nList: Int = IvfNList, iters: Int = IvfIters): Boolean = {
     GraftFunctions.ensureRegistered(spark)
-    val (_, trainedCount) = readIvfModel(spark, indexPath)
-    val corpus = spark.read.parquet(indexPath).select(col("vec_id"), col("vec"))
-    val total = corpus.count()
+    val live = liveIndex(spark, "ivf", indexPath, IvfParts)
+    val (_, trainedCount) = decodeModelRows(modelRows(spark, live))
+    val total = spark.read.parquet(live("lists")).count()
     if ((total - trainedCount).toDouble < staleness * trainedCount.toDouble) false
-    else ServingStore.withBuildLock(indexPath) {
-      // live-path retrain + swap: serialize with appends/serves (r15)
-      val snap = corpus.localCheckpoint() // sever from the files we rewrite
-      val centroids = ivfFit(snap, nList, iters)
-      val tmp = indexPath.stripSuffix("/") + "_tmp"
-      snap
-        .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
-        .write.mode("overwrite").partitionBy("cid").parquet(tmp)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val idx = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = idx.getFileSystem(conf)
-      // FileSystem ops signal failure by RETURNING false, not throwing —
-      // an unchecked swap could delete the live index and then leave the
-      // new generation stranded at _tmp while recording a fresh model
-      require(fs.delete(idx, true), s"could not delete old index generation $indexPath")
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), idx),
-        s"could not move new index generation $tmp -> $indexPath " +
-          "(new data is intact at the tmp path; model NOT updated)")
-      writeIvfModel(spark, indexPath, centroids, total)
+    else {
+      ServingStore.compact(spark, "ivf", indexPath, IvfParts) { (from, to) =>
+        val corpus = spark.read.parquet(from("lists")).select(col("vec_id"), col("vec"))
+          .localCheckpoint()
+        val centroids = ivfFit(corpus, nList, iters)
+        corpus
+          .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
+          .write.mode("overwrite").partitionBy("cid").parquet(to("lists"))
+        writeIvfModel(spark, to("model"), centroids, corpus.count())
+      }
       true
     }
   }
@@ -1069,8 +965,10 @@ object Similarity {
   /** IVF search over a materialized index using its PERSISTED model —
     * the no-ceremony entry point for an index built by [[writeIvfIndex]]
     * and maintained by [[appendIvfIndex]]/[[refreshIvfIndexIfStale]]. */
-  def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String): DataFrame =
-    knnIvfIndexed(spark, dir, indexPath, readIvfModel(spark, indexPath)._1)
+  def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String): DataFrame = {
+    val g = liveIndex(spark, "ivf", indexPath, IvfParts)
+    knnIvfLists(spark, dir, g("lists"), decodeModelRows(modelRows(spark, g))._1, KnnK)
+  }
 
   /** Driver-side margin-probe ranking over the persisted model — the
     * serving-path twin of [[probeIdxByMargin]]: the same arithmetic in
@@ -1107,16 +1005,22 @@ object Similarity {
     keyed.sorted.take(nProbe).map(_._2)
   }
 
-  /** IVF search over a materialized inverted-list index: each query's
-    * NProbe cells become a partition-pruning filter on the index scan —
-    * the unprobed cells' files are never opened. The query set is
+  /** IVF search over the live generation of an index store with the
+    * given quantizer ([[knnIvfLists]]). */
+  def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String,
+      centroids: Array[Array[Double]], k: Int = KnnK): DataFrame =
+    knnIvfLists(spark, dir, liveIndex(spark, "ivf", indexPath, IvfParts)("lists"), centroids, k)
+
+  /** IVF search over materialized inverted lists: each query's NProbe
+    * cells become a partition-pruning filter on the lists scan — the
+    * unprobed cells' files are never opened. The query set is
     * client-scale by nature (vectors arrive from callers in a real
     * deployment), so it is collected and probed driver-side
     * ([[probeCellsDriver]]); corpus-side scoring stays distributed.
     * Results are identical to [[knnIvf]] over the same corpus and
     * quantizer. */
-  def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String,
-      centroids: Array[Array[Double]], k: Int = KnnK): DataFrame = {
+  private def knnIvfLists(spark: SparkSession, dir: String, lists: String,
+      centroids: Array[Array[Double]], k: Int): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val probed = emb(spark, dir)
@@ -1130,7 +1034,7 @@ object Similarity {
       .flatMap { case (id, q, cells) => cells.map(cid => (id, q.toSeq, cid)) }
       .toDF("query_id", "qvec", "probe_cid")
     val probedCells = probed.flatMap(_._3).distinct.toSeq
-    val listed = spark.read.parquet(indexPath).filter(col("cid").isin(probedCells: _*))
+    val listed = spark.read.parquet(lists).filter(col("cid").isin(probedCells: _*))
     val scored = listed
       .join(broadcast(queries), col("cid") === col("probe_cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1243,76 +1147,55 @@ object Similarity {
     * namespace to [[ivfServePath]] — the two indexes never collide). */
   private[graft] def pqServePath(dir: String): String = servePath("pq_serve_", dir)
 
-  /** Build the PQ index generation: train codebooks, write the coded
-    * corpus (vec_id, codes) as parquet, persist the model through the
-    * same sidecar format as IVF (row key cid = subspace * PqK + code). */
-  private[graft] def writePqIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, fingerprint: Option[Long] = None): Array[Array[Array[Double]]] = {
+  /** Build a PQ index generation: train codebooks, write the coded
+    * corpus (vec_id, codes), persist the model in the IVF model format
+    * (row key cid = subspace * PqK + code). */
+  private def buildPq(spark: SparkSession, corpus: DataFrame,
+      g: ServingStore.Generation): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val books = pqFit(corpus)
     corpus.select(col("vec_id"), pqCodesCol(books).as("codes"))
-      .write.mode("overwrite").parquet(indexPath)
-    writeIvfModel(spark, indexPath, books.flatten, corpus.count(), fingerprint)
+      .write.mode("overwrite").parquet(g("codes"))
+    writeIvfModel(spark, g("model"), books.flatten, corpus.count())
     // geometry stamp (cid = -3: pos 0 -> PqM, pos 1 -> PqK), appended as
-    // its own tiny file: IVF readers ignore cid < -2 rows, and a crash
-    // between the two writes leaves a stamp-less sidecar that fails the
-    // read probe -> rebuild (never a wrong-shaped regroup)
+    // its own tiny file: IVF readers ignore cid < -2 rows
     import spark.implicits._
     Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble)).toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
-    books
+      .coalesce(1).write.mode("append").parquet(g("model"))
   }
 
-  /** Codebooks from a PQ model sidecar (regrouped from the flat cid
-    * encoding of [[writePqIndexOf]]). The geometry check is EXACT
-    * (PqM x PqK), not just divisibility: a sidecar written under retuned
-    * constants must fail this probe — the serve path then rebuilds —
-    * rather than regroup into wrong-shaped books whose out-of-range
-    * code lookups would kill (ANSI) or silently NULL every search. */
-  private[graft] def readPqBooks(spark: SparkSession, indexPath: String)
-      : (Array[Array[Array[Double]]], Option[Long]) = {
-    val rows = readModelRows(spark, indexPath)
-    val (flat, _, fp) = decodeModelRows(rows)
+  /** Codebooks from a PQ model (regrouped from the flat cid encoding of
+    * [[buildPq]]). The geometry check is EXACT (PqM x PqK), not just
+    * divisibility: a model written under retuned constants must fail to
+    * open — the serve path then rebuilds — rather than regroup into
+    * wrong-shaped books whose out-of-range code lookups would kill
+    * (ANSI) or silently NULL every search. */
+  private def pqBooksOf(rows: Array[org.apache.spark.sql.Row]): Array[Array[Array[Double]]] = {
+    val (flat, _) = decodeModelRows(rows)
     val geo = rows.filter(_.getInt(0) == -3)
       .map(r => r.getInt(1) -> r.getDouble(2).toInt).toMap
     require(geo.get(0).contains(PqM) && geo.get(1).contains(PqK),
-      s"PQ sidecar geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
+      s"PQ model geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
         "(constants retuned? the serve path rebuilds on this failure)")
     require(flat.length == PqM * PqK,
-      s"PQ sidecar has ${flat.length} codebook rows, expected $PqM x $PqK")
-    (flat.grouped(PqK).toArray, fp)
+      s"PQ model has ${flat.length} codebook rows, expected $PqM x $PqK")
+    flat.grouped(PqK).toArray
   }
 
   /** q_knn_pq SERVING path: search the persisted coded corpus,
-    * (re)building codebooks + codes only when absent or stale — same
-    * fingerprint-keyed generation discipline as [[knnIvfServe]]
-    * (training amortizes over searches; an equal-size content swap still
+    * (re)building codebooks + codes only when absent or stale — the
+    * same [[ServingStore]] discipline as [[knnIvfServe]] (training
+    * amortizes over searches; an equal-size content swap still
     * rebuilds). Results are bit-identical to [[knnPq]]: the f64 model
     * round-trips parquet exactly and encoding is deterministic
     * (first-wins argmin). */
   def knnPqServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = pqServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readPqBooks(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("pq", ivfModelPath(indexPath), e)
-          None
-      }
-    val books = stored match {
-      case Some((b, Some(storedFp))) if storedFp == fp => b
-      case _ => ServingStore.withBuildLock(indexPath) {
-        (try Some(readPqBooks(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((b, Some(f2))) if f2 == fp => b
-          case _ =>
-            Tables.invalidate(spark, dir, "embeddings")
-            writePqIndexOf(spark, emb(spark, dir), indexPath, Some(fp))
-        }
-      }
-    }
-    withRecall(knnPqOf(spark, dir, spark.read.parquet(indexPath), books, k), spark, dir, k)
+    val (g, books) = ServingStore.serve(spark, "pq", pqServePath(dir),
+      corpusFingerprint(spark, dir), CodesParts, force = false) { g =>
+      Tables.invalidate(spark, dir, "embeddings")
+      buildPq(spark, emb(spark, dir), g)
+    }(g => (g, pqBooksOf(modelRows(spark, g))))
+    withRecall(knnPqOf(spark, dir, spark.read.parquet(g("codes")), books, k), spark, dir, k)
   }
 
   // ------------------------------------------------------------------ OPQ
@@ -1406,58 +1289,55 @@ object Similarity {
   /** Serving-index location for a corpus dir's OPQ generation. */
   private[graft] def opqServePath(dir: String): String = servePath("opq_serve_", dir)
 
-  /** Row-key offset for rotation cells in the OPQ sidecar: row
+  /** Row-key offset for rotation cells in the OPQ model: row
     * (cid = OpqRotBase − i, pos = j, w = R(i)(j)). Codebooks ride at
-    * cid ≥ 0 ([[writePqIndexOf]]'s layout), so one sidecar carries the
-    * whole model and the freshness probe stays a single read. */
+    * cid ≥ 0 ([[buildPq]]'s layout), so one model carries rotation
+    * and books. */
   private val OpqRotBase = -1000
 
-  /** Build the OPQ index generation: train (R, books), write the coded
-    * ROTATED corpus, persist rotation + books + geometry in one sidecar.
-    * Stamp pos 3 marks the rotation's presence — a plain-PQ sidecar
-    * fails the OPQ read probe explicitly and rebuilds. */
-  private[graft] def writeOpqIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, fingerprint: Option[Long] = None)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+  /** Build an OPQ index generation: train (R, books), write the coded
+    * ROTATED corpus, persist rotation + books + geometry in one model.
+    * Stamp pos 3 marks the rotation's presence — a plain-PQ model
+    * fails to open as OPQ and rebuilds. */
+  private def buildOpq(spark: SparkSession, corpus: DataFrame,
+      g: ServingStore.Generation): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val (r, books) = opqFit(corpus)
     corpus
       .select(col("vec_id"), rotateCol(r, col("vec")).as("vec"))
       .select(col("vec_id"), pqCodesCol(books).as("codes"))
-      .write.mode("overwrite").parquet(indexPath)
-    writeIvfModel(spark, indexPath, books.flatten, corpus.count(), fingerprint)
+      .write.mode("overwrite").parquet(g("codes"))
+    writeIvfModel(spark, g("model"), books.flatten, corpus.count())
     import spark.implicits._
     val rotRows = r.zipWithIndex.flatMap { case (row, i) =>
       row.zipWithIndex.map { case (v, j) => (OpqRotBase - i, j, v) }
     }
     (rotRows.toSeq ++ Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble), (-3, 3, 1.0)))
       .toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
-    (r, books)
+      .coalesce(1).write.mode("append").parquet(g("model"))
   }
 
-  private[graft] def readOpqModels(spark: SparkSession, indexPath: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]], Option[Long]) = {
-    val rows = readModelRows(spark, indexPath)
-    val (flat, _, fp) = decodeModelRows(rows)
+  private def opqModelsOf(rows: Array[org.apache.spark.sql.Row])
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val (flat, _) = decodeModelRows(rows)
     val geo = rows.filter(_.getInt(0) == -3)
       .map(r => r.getInt(1) -> r.getDouble(2).toInt).toMap
     require(geo.get(0).contains(PqM) && geo.get(1).contains(PqK),
-      s"OPQ sidecar geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
+      s"OPQ model geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
         "(constants retuned? the serve path rebuilds on this failure)")
     require(geo.get(3).contains(1),
-      "OPQ sidecar carries no rotation marker — its codes decode under " +
+      "OPQ model carries no rotation marker — its codes decode under " +
         "unrotated semantics; the serve path rebuilds on this failure")
     require(flat.length == PqM * PqK,
-      s"OPQ sidecar has ${flat.length} codebook rows, expected $PqM x $PqK")
+      s"OPQ model has ${flat.length} codebook rows, expected $PqM x $PqK")
     val books = flat.grouped(PqK).toArray
     val dim = books.head.head.length * PqM
     val rotCells = rows.filter(_.getInt(0) <= OpqRotBase)
     require(rotCells.length == dim * dim,
-      s"OPQ sidecar has ${rotCells.length} rotation cells, expected $dim x $dim")
+      s"OPQ model has ${rotCells.length} rotation cells, expected $dim x $dim")
     val r = Array.fill(dim)(new Array[Double](dim))
     rotCells.foreach(c => r(OpqRotBase - c.getInt(0))(c.getInt(1)) = c.getDouble(2))
-    (r, books, fp)
+    (r, books)
   }
 
   /** ADC + exact re-rank over an OPQ-coded corpus: queries rotate into
@@ -1496,43 +1376,26 @@ object Similarity {
   /** q_knn_opq SERVING path — same fingerprint-keyed generation
     * discipline as [[knnPqServe]]. */
   def knnOpqServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = opqServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readOpqModels(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("opq", ivfModelPath(indexPath), e)
-          None
-      }
-    val (r, books) = stored match {
-      case Some((rr, b, Some(storedFp))) if storedFp == fp => (rr, b)
-      case _ => ServingStore.withBuildLock(indexPath) {
-        (try Some(readOpqModels(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((rr, b, Some(f2))) if f2 == fp => (rr, b)
-          case _ =>
-            Tables.invalidate(spark, dir, "embeddings")
-            writeOpqIndexOf(spark, emb(spark, dir), indexPath, Some(fp))
-        }
-      }
-    }
-    withRecall(knnOpqOf(spark, dir, spark.read.parquet(indexPath), r, books, k),
+    val (g, (r, books)) = ServingStore.serve(spark, "opq", opqServePath(dir),
+      corpusFingerprint(spark, dir), CodesParts, force = false) { g =>
+      Tables.invalidate(spark, dir, "embeddings")
+      buildOpq(spark, emb(spark, dir), g)
+    }(g => (g, opqModelsOf(modelRows(spark, g))))
+    withRecall(knnOpqOf(spark, dir, spark.read.parquet(g("codes")), r, books, k),
       spark, dir, k)
   }
 
   // --------------------------------------------------------------- IVF-PQ
 
   /** Row-key offset for PQ codebook weights inside the fused index's
-    * ONE model sidecar: row (cid = -1000 - flatIdx, pos, w) carries
-    * codebook entry flatIdx = subspace * PqK + code, position pos. The
-    * IVF decode ignores all cid < 0 rows it doesn't name, so centroids
-    * and books ride the same parquet and the freshness probe stays a
-    * single read (a sibling books sidecar cost one extra Spark job per
-    * warm serve call). */
+    * ONE model: row (cid = -1000 - flatIdx, pos, w) carries codebook
+    * entry flatIdx = subspace * PqK + code, position pos. The IVF decode
+    * ignores all cid < 0 rows it doesn't name, so centroids and books
+    * ride the same parquet and opening the generation stays a single
+    * read. */
   private val IvfPqBookBase = -1000
 
-  /** Row-key offset for OPQ rotation cells in the fused sidecar (book
+  /** Row-key offset for OPQ rotation cells in the fused model (book
     * rows occupy [IvfPqBookBase − PqM·PqK + 1, IvfPqBookBase], far
     * above this base). */
   private val IvfPqRotBase = -10000
@@ -1561,8 +1424,13 @@ object Similarity {
     * the rotation (Rᵀ, orthogonality) and adds the centroid back
     * ([[knnIvfPq]]), so re-rank semantics are unchanged. */
   private[graft] def writeIvfPqIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, fingerprint: Option[Long] = None)
-      : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]]) = {
+      indexPath: String)
+      : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]]) =
+    ServingStore.serve(spark, "ivf-pq", indexPath, Unkeyed, IvfParts, force = true)(
+      buildIvfPq(spark, corpus, _))(g => ivfPqModelsOf(modelRows(spark, g)))
+
+  private def buildIvfPq(spark: SparkSession, corpus: DataFrame,
+      g: ServingStore.Generation): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val centroids = ivfFit(corpus)
     // cell assignment + residual in one projection; the lazy checkpoint
@@ -1579,16 +1447,14 @@ object Similarity {
     residuals
       .select(col("vec_id"), col("cid"), rotateCol(rot, col("vec")).as("vec"))
       .select(col("vec_id"), col("cid"), pqCodesCol(books).as("codes"))
-      .write.mode("overwrite").partitionBy("cid").parquet(indexPath)
-    writeIvfModel(spark, indexPath, centroids, corpus.count(), fingerprint)
+      .write.mode("overwrite").partitionBy("cid").parquet(g("lists"))
+    writeIvfModel(spark, g("model"), centroids, corpus.count())
     // books + rotation + the PqM x PqK geometry stamp appended into the
-    // SAME sidecar as negative-offset rows (a crash between the writes
-    // leaves a books-less sidecar that fails the read probe -> rebuild,
-    // never mixed generations; the stamp makes a constants retune fail
-    // the probe EXPLICITLY — the raw cell count is invariant to a
-    // PqM-only retune, since PqM x PqK x dsub = PqK x dim). Stamp pos 2
-    // marks residual encoding and pos 4 the OPQ rotation: generations
-    // written under either older semantics fail the read probe and
+    // SAME model as negative-offset rows (the stamp makes a constants
+    // retune fail to open EXPLICITLY — the raw cell count is invariant
+    // to a PqM-only retune, since PqM x PqK x dsub = PqK x dim). Stamp
+    // pos 2 marks residual encoding and pos 4 the OPQ rotation:
+    // generations written under either older semantics fail to open and
     // rebuild — their codes decode differently.
     import spark.implicits._
     val bookRows = books.flatten.zipWithIndex.flatMap { case (c, i) =>
@@ -1600,31 +1466,28 @@ object Similarity {
     (bookRows ++ rotRows ++
       Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble), (-3, 2, 1.0), (-3, 4, 1.0)))
       .toSeq.toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
-    (centroids, rot, books)
+      .coalesce(1).write.mode("append").parquet(g("model"))
   }
 
-  private[graft] def readIvfPqModels(spark: SparkSession, indexPath: String)
-      : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]],
-        Option[Long]) = {
-    val rows = readModelRows(spark, indexPath)
-    val (cents, _, fp) = decodeModelRows(rows)
+  private def ivfPqModelsOf(rows: Array[org.apache.spark.sql.Row])
+      : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val (cents, _) = decodeModelRows(rows)
     val geo = rows.filter(_.getInt(0) == -3)
       .map(r => r.getInt(1) -> r.getDouble(2).toInt).toMap
     require(geo.get(0).contains(PqM) && geo.get(1).contains(PqK),
-      s"IVF-PQ sidecar geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
+      s"IVF-PQ model geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
         "(constants retuned? the serve path rebuilds on this failure)")
     require(geo.get(2).contains(1),
-      "IVF-PQ sidecar predates residual encoding — its codes decode under " +
+      "IVF-PQ model predates residual encoding — its codes decode under " +
         "raw-vector semantics; the serve path rebuilds on this failure")
     require(geo.get(4).contains(1),
-      "IVF-PQ sidecar predates the OPQ rotation — its codes decode under " +
+      "IVF-PQ model predates the OPQ rotation — its codes decode under " +
         "unrotated semantics; the serve path rebuilds on this failure")
     val bookCells = rows.filter(r =>
       r.getInt(0) <= IvfPqBookBase && r.getInt(0) > IvfPqRotBase)
     val dsub = cents.head.length / PqM
     require(bookCells.length == PqM * PqK * dsub,
-      s"IVF-PQ sidecar has ${bookCells.length} codebook cells, " +
+      s"IVF-PQ model has ${bookCells.length} codebook cells, " +
         s"expected $PqM x $PqK x $dsub")
     val flat = Array.fill(PqM * PqK)(new Array[Double](dsub))
     bookCells.foreach { r =>
@@ -1633,12 +1496,12 @@ object Similarity {
     val dim = cents.head.length
     val rotCells = rows.filter(_.getInt(0) <= IvfPqRotBase)
     require(rotCells.length == dim * dim,
-      s"IVF-PQ sidecar has ${rotCells.length} rotation cells, expected $dim x $dim")
+      s"IVF-PQ model has ${rotCells.length} rotation cells, expected $dim x $dim")
     val rot = Array.fill(dim)(new Array[Double](dim))
     rotCells.foreach { r =>
       rot(IvfPqRotBase - r.getInt(0))(r.getInt(1)) = r.getDouble(2)
     }
-    (cents, rot, flat.grouped(PqK).toArray, fp)
+    (cents, rot, flat.grouped(PqK).toArray)
   }
 
   /** Search the fused index: driver-ranked probe cells prune the codes
@@ -1650,7 +1513,13 @@ object Similarity {
     * the 8 query rows and O(queries x shortlist) re-rank lookups. */
   def knnIvfPq(spark: SparkSession, dir: String, indexPath: String,
       centroids: Array[Array[Double]], rot: Array[Array[Double]],
-      books: Array[Array[Array[Double]]], k: Int = KnnK): DataFrame = {
+      books: Array[Array[Array[Double]]], k: Int = KnnK): DataFrame =
+    knnIvfPqLists(spark, dir, liveIndex(spark, "ivf-pq", indexPath, IvfParts)("lists"),
+      centroids, rot, books, k)
+
+  private def knnIvfPqLists(spark: SparkSession, dir: String, lists: String,
+      centroids: Array[Array[Double]], rot: Array[Array[Double]],
+      books: Array[Array[Array[Double]]], k: Int): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val corpus = emb(spark, dir)
@@ -1682,7 +1551,7 @@ object Similarity {
     val queries = broadcast(probed.toSeq
       .map { case (id, q, _) => (id, q.toSeq) }
       .toDF("query_id", "qvec"))
-    val listed = spark.read.parquet(indexPath)
+    val listed = spark.read.parquet(lists)
       .filter(col("cid").isin(probedCells: _*))
     val adc = listed
       .withColumn("recon",
@@ -1701,101 +1570,55 @@ object Similarity {
   /** q_knn_ivfpq SERVING path — same fingerprint-keyed generation
     * discipline as the flat PQ and IVF serves. */
   def knnIvfPqServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = ivfPqServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readIvfPqModels(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("ivf-pq", ivfModelPath(indexPath), e)
-          None
-      }
-    val (cents, rot, books) = stored match {
-      case Some((c, r, b, Some(storedFp))) if storedFp == fp => (c, r, b)
-      case _ => ServingStore.withBuildLock(indexPath) {
-        (try Some(readIvfPqModels(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((c, r, b, Some(f2))) if f2 == fp => (c, r, b)
-          case _ =>
-            Tables.invalidate(spark, dir, "embeddings")
-            writeIvfPqIndexOf(spark, emb(spark, dir), indexPath, Some(fp))
-        }
-      }
-    }
-    withRecall(knnIvfPq(spark, dir, indexPath, cents, rot, books, k), spark, dir, k)
+    val (g, (cents, rot, books)) = ServingStore.serve(spark, "ivf-pq", ivfPqServePath(dir),
+      corpusFingerprint(spark, dir), IvfParts, force = false) { g =>
+      Tables.invalidate(spark, dir, "embeddings")
+      buildIvfPq(spark, emb(spark, dir), g)
+    }(g => (g, ivfPqModelsOf(modelRows(spark, g))))
+    withRecall(knnIvfPqLists(spark, dir, g("lists"), cents, rot, books, k), spark, dir, k)
   }
 
   /** Incrementally maintain the fused IVF-PQ index after an embedding
     * ingest: encode ONLY the new vectors with the EXISTING coarse
-    * quantizer and codebooks, append their codes into the existing
-    * `cid=` partition dirs, and advance the fingerprint sidecar to the
-    * post-append corpus state — the embedding-side twin of
-    * [[Dedup.appendPostings]], and the standard production shape (a
-    * trained quantizer absorbs new vectors without retraining; drift is
-    * a slow, monitored process handled by periodic rebuilds, not by
-    * re-encoding the corpus per ingest). At 100 TB this is the
-    * difference between encoding a day's vectors and re-clustering
-    * everything.
+    * quantizer and codebooks, append their codes into the live
+    * generation's `cid=` partition dirs, and advance its stamp to the
+    * post-append corpus state ([[ServingStore.appendInPlace]]) — the
+    * embedding-side twin of [[Dedup.appendPostings]], and the standard
+    * production shape (a trained quantizer absorbs new vectors without
+    * retraining; drift is a slow, monitored process handled by periodic
+    * rebuilds, not by re-encoding the corpus per ingest). At 100 TB
+    * this is the difference between encoding a day's vectors and
+    * re-clustering everything.
     *
     * Contract mirrors [[Dedup.appendPostings]]: call AFTER the delta
     * files land in `dir`, passing exactly the newly-landed vectors;
     * `expectedFp` (captured BEFORE the delta landed) proves the
     * generation matches the corpus the delta extends — a stale index
     * must take the full-rebuild path, never absorb a delta and get
-    * re-stamped fresh. Crash safety likewise: the sidecar advances only
-    * after the code append commits, so a crash in between leaves a
-    * stale sidecar and the next serve rebuilds. The model sidecar is
-    * rewritten (same centroids/books, new fingerprint): a crash mid-
-    * rewrite leaves a books-less sidecar that fails the read probe ->
-    * rebuild, the build path's own failure mode. */
+    * re-stamped fresh. The model is unchanged by an append. */
   def appendIvfPq(spark: SparkSession, dir: String, newVecs: DataFrame,
       expectedFp: Option[Long] = None): Unit = {
     GraftFunctions.ensureRegistered(spark)
-    val indexPath = ivfPqServePath(dir)
-    require(new java.io.File(indexPath).exists(),
-      s"no IVF-PQ generation at $indexPath to append into — serve once first")
-    ServingStore.withBuildLock(indexPath) {
-    val (cents, rot, books, storedFp0) =
-      try readIvfPqModels(spark, indexPath)
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          throw new IllegalStateException(
-            s"IVF-PQ sidecar at ${ivfModelPath(indexPath)} unreadable — " +
-              "rebuild with knnIvfPqServe instead of appending into an " +
-              "unproven generation", e)
-      }
-    val storedFp = storedFp0.getOrElse(throw new IllegalStateException(
-      "IVF-PQ sidecar carries no fingerprint — rebuild instead of appending"))
-    expectedFp.foreach(f => require(storedFp == f,
-      s"IVF-PQ generation at $indexPath was built for a different corpus " +
-        s"state (stored fp $storedFp != pre-append fp $f): rebuild, not append"))
-    // encode the delta EXACTLY as the build path does: cell assignment,
-    // residual against the cell centroid, PQ codes of the ROTATED residual
-    newVecs
-      .select(col("vec_id"), col("vec"),
-        GraftFunctions.graftArgminL2(col("vec"), centsLit(cents)).as("cid"))
-      .select(col("vec_id"), col("cid"),
-        zip_with(col("vec"), element_at(centsLit(cents), col("cid") + 1),
-          (x, c) => x.cast(DoubleType) - c).as("vec"))
-      .select(col("vec_id"), col("cid"), rotateCol(rot, col("vec")).as("vec"))
-      .select(col("vec_id"), col("cid"), pqCodesCol(books).as("codes"))
-      .write.mode("append").partitionBy("cid").parquet(indexPath)
-    // delta files are already in `dir`: re-list and stamp post-append
-    Tables.invalidate(spark, dir, "embeddings")
-    val fp = corpusFingerprint(spark, dir)
-    val (_, trainedCount, _) = readIvfModelFull(spark, indexPath)
-    writeIvfModel(spark, indexPath, cents, trainedCount, Some(fp))
-    import spark.implicits._
-    val bookRows = books.flatten.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (wv, p) => (IvfPqBookBase - i, p, wv) }
-    }
-    val rotRows = rot.zipWithIndex.flatMap { case (row, i) =>
-      row.zipWithIndex.map { case (v, j) => (IvfPqRotBase - i, j, v) }
-    }
-    (bookRows ++ rotRows ++
-      Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble), (-3, 2, 1.0), (-3, 4, 1.0)))
-      .toSeq.toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
+    ServingStore.appendInPlace(spark, "ivf-pq", ivfPqServePath(dir), IvfParts) { g =>
+      expectedFp.foreach(f => if (g.fp != f) throw new ServingStore.StaleStoreRefusal(
+        s"IVF-PQ generation at ${g.dir} was built for a different corpus " +
+          s"state (stored fp ${g.fp} != pre-append fp $f): rebuild, not append"))
+      // delta files are already in `dir`: re-list and stamp post-append
+      Tables.invalidate(spark, dir, "embeddings")
+      corpusFingerprint(spark, dir)
+    } { g =>
+      val (cents, rot, books) = ivfPqModelsOf(modelRows(spark, g))
+      // encode the delta EXACTLY as the build path does: cell assignment,
+      // residual against the cell centroid, PQ codes of the ROTATED residual
+      newVecs
+        .select(col("vec_id"), col("vec"),
+          GraftFunctions.graftArgminL2(col("vec"), centsLit(cents)).as("cid"))
+        .select(col("vec_id"), col("cid"),
+          zip_with(col("vec"), element_at(centsLit(cents), col("cid") + 1),
+            (x, c) => x.cast(DoubleType) - c).as("vec"))
+        .select(col("vec_id"), col("cid"), rotateCol(rot, col("vec")).as("vec"))
+        .select(col("vec_id"), col("cid"), pqCodesCol(books).as("codes"))
+        .write.mode("append").partitionBy("cid").parquet(g("lists"))
     }
   }
 
@@ -1806,82 +1629,33 @@ object Similarity {
     * partition dir, so a season of ingests makes every probe open
     * O(appends) small files per probed cell — the same LSM read
     * amplification [[Dedup.compactPostings]] undoes for the posting
-    * index. Rewriting through a hash repartition on `cid` sends every
-    * cell's rows to ONE task, so the partitioned write leaves exactly
-    * one file per cell regardless of how AQE sizes the task count.
-    * Codes, model sidecar and fingerprint are unchanged — probes
-    * before and after read identical rows.
-    *
-    * Crash safety: the compacted copy is fully written beside the live
-    * index first; the model sidecar is then STAGED AWAY before the file
-    * swap and restored after it, so a crash anywhere in the window
-    * leaves a sidecar-less generation the serve path rebuilds — never a
-    * half-swapped index served as fresh. */
-  def compactIvfPq(spark: SparkSession, dir: String): Unit = {
-    val indexPath = ivfPqServePath(dir)
-    // read probe: refuse to compact an unproven or older-semantics
-    // generation (same failure → rebuild contract as the serve path)
-    readIvfPqModels(spark, indexPath)
-    compactPartitionedIndex(spark, indexPath)
-  }
-
-  /** Shared compaction mechanics for any cid-partitioned index with a
-    * sibling `_model` sidecar ([[compactIvf]]/[[compactIvfPq]] differ
-    * only in their read probes): rewrite through a hash repartition on
-    * `cid` (one file per cell), then swap with the sidecar STAGED AWAY
-    * for the window — a crash anywhere in it leaves a sidecar-less
-    * generation the serve path rebuilds, never a half-swapped index
-    * read as live. */
-  private def compactPartitionedIndex(spark: SparkSession, indexPath: String): Unit = {
-    // live-path mutation: serialize with concurrent serve rebuilds and
-    // appends under the store's build lock (r15)
-    ServingStore.withBuildLock(indexPath) {
-    val modelPath = ivfModelPath(indexPath)
-    val tmpPath = indexPath + "_compact_tmp"
-    deleteTree(tmpPath)
-    spark.read.parquet(indexPath)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(tmpPath)
-    val stage = modelPath + "_compact_stage"
-    deleteTree(stage)
-    val p = java.nio.file.Paths.get(_: String)
-    java.nio.file.Files.move(p(modelPath), p(stage))
-    deleteTree(indexPath)
-    // harness-only kill -9 with the model staged away and the index
-    // deleted — the model-less generation the read probe must reject
-    ServingStore.crashPoint("ann.compact.midswap")
-    java.nio.file.Files.move(p(tmpPath), p(indexPath))
-    java.nio.file.Files.move(p(stage), p(modelPath))
-    }
-    // live files rewritten under an unchanged corpus stamp: memoized
-    // prepared plans pin the old listing — drop them (r16 review)
-    graft.PlanCache.invalidate()
-  }
+    * index. Codes, model and fingerprint are unchanged — probes
+    * before and after read identical rows. */
+  def compactIvfPq(spark: SparkSession, dir: String): Unit =
+    compactLists(spark, "ivf-pq", ivfPqServePath(dir), ivfPqModelsOf)
 
   /** Compact a plain-IVF generation's inverted lists back to one vector
     * file per cell — [[compactIvfPq]]'s twin for the RAW-vector index
-    * maintained by [[writeIvfIndex]]/[[appendIvfIndex]] (each append
-    * lands a fresh file per touched `cid=` partition, so a season of
-    * ingests makes every probe open O(appends) files per probed cell).
-    * Same mechanics: a hash repartition on `cid` sends each cell's rows
-    * to one task, the partitioned write leaves one file per cell, rows
-    * and model are unchanged; same staged-sidecar crash discipline — a
-    * crash anywhere in the swap window leaves a model-less generation
-    * the read probe rejects, never a half-swapped index read as live. */
-  def compactIvf(spark: SparkSession, indexPath: String): Unit = {
-    // read probe: refuse to compact an unproven generation
-    readIvfModel(spark, indexPath)
-    compactPartitionedIndex(spark, indexPath)
-  }
+    * maintained by [[writeIvfIndex]]/[[appendIvfIndex]]. */
+  def compactIvf(spark: SparkSession, indexPath: String): Unit =
+    compactLists(spark, "ivf", indexPath, decodeModelRows)
 
-  private def deleteTree(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverseIterator
-        .foreach(java.nio.file.Files.delete)
+  /** Shared compaction of a cid-partitioned index: a hash repartition
+    * on `cid` sends each cell's rows to one task, so the partitioned
+    * write leaves exactly one file per cell in a NEW generation under
+    * the unchanged stamp ([[ServingStore.compact]]); the model is
+    * linked across unchanged. `probe` must decode the live model first:
+    * an unproven or older-semantics generation is refused, never
+    * compacted. */
+  private def compactLists(spark: SparkSession, what: String, indexPath: String,
+      probe: Array[org.apache.spark.sql.Row] => Any): Unit =
+    ServingStore.compact(spark, what, indexPath, IvfParts) { (from, to) =>
+      probe(modelRows(spark, from))
+      spark.read.parquet(from("lists"))
+        .repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(to("lists"))
+      ServingStore.carry(from, to, "model")
     }
-  }
 
   /** q_dedup_embedding_resolve — keep-one-copy canonicalization over the
     * embedding near-dup graph: [[embeddingDedup]] pairs resolved to
@@ -1913,30 +1687,20 @@ object Similarity {
   private[graft] def semCellsServePath(dir: String): String =
     servePath("semcells_serve_", dir)
 
-  /** Serve-or-train the dedup cell quantizer — fingerprint-keyed like
-    * every model sidecar (only the `_model` sidecar exists; the blocker
-    * needs centroids, not materialized lists). */
-  private[graft] def serveSemCells(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val path = semCellsServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readIvfModelFull(spark, path))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("sem-cells", ivfModelPath(path), e)
-          None
-      }
-    stored match {
-      case Some((cents, _, Some(storedFp))) if storedFp == fp => cents
-      case _ =>
-        Tables.invalidate(spark, dir, "embeddings")
-        val corpus = emb(spark, dir)
-        val n = corpus.count()
-        val cents = ivfFit(corpus, semCellCount(n), knownCount = Some(n))
-        writeIvfModel(spark, path, cents, 0L, Some(fp))
-        cents
-    }
-  }
+  /** Serve-or-train the dedup cell quantizer — a model-only
+    * [[ServingStore]] generation (the blocker needs centroids, not
+    * materialized lists). */
+  private[graft] def serveSemCells(spark: SparkSession, dir: String): Array[Array[Double]] =
+    ServingStore.serve(spark, "sem-cells", semCellsServePath(dir), corpusFingerprint(spark, dir),
+      SemCellParts, force = false) { g =>
+      Tables.invalidate(spark, dir, "embeddings")
+      val corpus = emb(spark, dir)
+      val n = corpus.count()
+      writeIvfModel(spark, g("model"),
+        ivfFit(corpus, semCellCount(n), knownCount = Some(n)), 0L)
+    }(g => decodeModelRows(modelRows(spark, g))._1)
+
+  private[graft] val SemCellParts = ServingStore.Layout(Seq(ServingStore.plain("model")))
 
   private[graft] def semAssignServePath(dir: String): String =
     servePath("semassign_serve_", dir)
@@ -1980,8 +1744,8 @@ object Similarity {
 
   /** Serve-or-build the cell-assignment generation. The quantizer stays
     * its own (inner) store: it is model state other surfaces could
-    * cite, and a crash between the two writes leaves the assignment
-    * sidecar stale -> assignments rebuild, quantizer serves (never a
+    * cite, and a crash between the two commits leaves the assignment
+    * store stale -> assignments rebuild, quantizer serves (never a
     * fresh-looking half-built pair). */
   private[graft] def serveCellAssignments(spark: SparkSession, dir: String): DataFrame = {
     val fp = semAssignFingerprint(spark, dir)

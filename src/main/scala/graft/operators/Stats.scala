@@ -74,7 +74,7 @@ object Stats {
     // they can disagree by 1 ulp of the target scale). Summing the
     // persisted per-(order, month) partials is bit-equal to the flat
     // sum (decimal addition is associative).
-    val monthly = spark.read.parquet(layout.monthFactPath)
+    val monthly = spark.read.parquet(layout("monthfact"))
       .groupBy(
         col("nationkey"),
         col("ship_yy").as("yy"),

@@ -80,7 +80,7 @@ object ContaminationSink {
   }
 
   /** The current full train-split contamination report: the sparse
-    * counts store joined through the posting index's doc-stats sidecar
+    * counts store joined through the posting index's doc-stats artifact
     * — identical shape (and, by the union law, identical content) to
     * [[Curation.contaminationDeltaServe]] over every gram seen. */
   def currentScreen(spark: SparkSession, dir: String, stateRoot: String): DataFrame = {

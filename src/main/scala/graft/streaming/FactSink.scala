@@ -60,7 +60,7 @@ object FactSink {
     def verifyCoveredOrRepair(refusal: String): Unit = {
       val layout = StarSchema.ensureFactLayout(spark, dir)
       val missing = batchKeys
-        .join(spark.table(layout.ordersTable).select(col("o_orderkey")),
+        .join(spark.read.parquet(layout("orders")).select(col("o_orderkey")),
           Seq("o_orderkey"), "left_anti")
       if (missing.isEmpty)
         logger.warn(s"fact sink: batch $batchId append refused ($refusal) " +
@@ -73,8 +73,8 @@ object FactSink {
         StarSchema.ensureFactLayout(spark, dir, force = true)
       }
     }
-    val sidecar = new java.io.File(StarSchema.factServePath(dir) + "_model")
-    if (!sidecar.exists()) {
+    if (ServingStore.live(spark, "fact-layout", StarSchema.factServePath(dir),
+        StarSchema.FactParts).isEmpty) {
       // first batch against a layout-less corpus: the full build covers
       // every file landed so far; later batches of those rows fold into
       // the refusals below

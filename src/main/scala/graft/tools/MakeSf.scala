@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * full-suite pair at 10x the data either retires them or names the
   * real offenders).
   *
-  * Facts replicate with id offsets (the [[StressR13b]] convention) so
+  * Facts replicate with fixed per-copy id offsets (copy i adds i x a
+  * key stride far above the source's largest key) so
   * fact-side joins stay consistent; dimension tables copy through
   * unchanged — fact growth is what the floor claim is about, and
   * replicated dims would break fact->dim joins' semantics (10 copies

@@ -28,20 +28,24 @@ import org.apache.spark.sql.functions._
   *  - NO LOCK/TOMBSTONE LITTER: after both workers exit, no `_lock`
   *    and no `*_lock_tomb_*` path survives next to the store.
   *
-  * r16 additions (r15 verdict #2 — the locking sweep landed after the
-  * r15 contention run, so the LIVE-PATH stores had never seen a real
-  * two-JVM race):
+  * The multi-artifact stores (fact layout, posting index, ANN index)
+  * add in-place appends, compaction and catalog registration to the
+  * protocol, so they get their own two-JVM phases:
   *
-  *  - LIVE-PATH PHASES (4-5): two processes race the fact-layout
-  *    build, run lockstep order-complete appends, race a compaction
-  *    against a live reader (loud-failure-then-retry contract), and
-  *    race the posting-index and ANN-index ensures — cross-checked
-  *    against a cold single-process rebuild over the full corpus.
-  *  - KILL -9 CRASH INJECTION: separate JVMs are halted (137) INSIDE
-  *    the unprove-before-mutate swap windows of all three compaction
-  *    paths (GRAFT_CRASH_POINT seam), then a fresh recovery JVM must
-  *    take over the dead holders' stale locks, detect the unproven
-  *    state, rebuild, and serve results identical to pre-crash.
+  *  - MULTI-ARTIFACT PHASES (4-5): two processes race the fact-layout
+  *    build, run lockstep order-complete in-place appends, race a
+  *    compaction against a live reader (which must see ZERO failures:
+  *    the compaction writes a new generation and never touches the
+  *    one the reader listed), and race the posting-index and ANN-index
+  *    ensures — cross-checked against a cold single-process rebuild
+  *    over the full corpus.
+  *  - KILL -9 CRASH INJECTION: separate JVMs are halted (137) at the
+  *    protocol's crash point — a compaction's new generation fully
+  *    written, the sidecar not yet stamped — of the fact layout, the
+  *    posting index and the IVF index (GRAFT_CRASH_POINT seam). A fresh
+  *    recovery JVM must serve results identical to pre-crash, then take
+  *    over the dead holders' stale locks by compacting each store again
+  *    and serve the same results once more.
   *
   * Run: `sbt 'runMain graft.tools.StoreContention'` (driver mode —
   * spawns the two workers itself; requires a prior `sbt compile`).
@@ -50,6 +54,12 @@ import org.apache.spark.sql.functions._
 object StoreContention {
 
   private val Rounds = 8
+
+  /** Crash mode -> the store's commit crash point in [[ServingStore]]. */
+  private val CrashPoints = Map(
+    "crashfact" -> "fact-layout.commit",
+    "crashpostings" -> "posting-index.commit",
+    "crashann" -> "ivf.commit")
   private val RowsPerGen = 100
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -57,17 +67,17 @@ object StoreContention {
     case "crashfact" :: base :: Nil =>
       graft.operators.StarSchema.compactFactLayout(
         GraftSession.local("graft-crashfact"), base + "/corpus")
-      sys.error("fact.compact.midswap crash point did not fire")
+      sys.error(s"${CrashPoints("crashfact")} crash point did not fire")
     case "crashpostings" :: base :: Nil =>
       graft.operators.Dedup.compactPostings(
         GraftSession.local("graft-crashpostings"), base + "/corpus")
-      sys.error("postings.compact.midswap crash point did not fire")
+      sys.error(s"${CrashPoints("crashpostings")} crash point did not fire")
     case "crashann" :: base :: Nil =>
       val s = GraftSession.local("graft-crashann")
       graft.operators.Similarity.knnIvfServe(s, base + "/corpus").count()
       graft.operators.Similarity.compactIvf(s,
         graft.operators.Similarity.ivfServePath(base + "/corpus"))
-      sys.error("ann.compact.midswap crash point did not fire")
+      sys.error(s"${CrashPoints("crashann")} crash point did not fire")
     case "recover" :: base :: Nil => recover(base)
     case _ => driver()
   }
@@ -92,7 +102,7 @@ object StoreContention {
       pb.redirectOutput(java.io.File.createTempFile(s"contend_$mode", ".log"))
       pb.start()
     }
-    // corpus prep for the LIVE-PATH phases (r15 verdict #2): a real
+    // corpus prep for the multi-artifact phases: a real
     // TPC-H-shaped corpus the workers will race fact-layout builds,
     // order-complete appends, postings/ANN ensures and a compaction
     // over — plus the two delta slices and a full-corpus twin for the
@@ -155,7 +165,7 @@ object StoreContention {
     println(s"[contend] PASS: 2-process ensure/append/reader contention clean " +
       s"(final fp $fp, ${rows.length} rows, ${gens.size} generations)")
 
-    // ---- live-path phases' cross-process audit (r15 verdict #2) ----
+    // ---- multi-artifact phases' cross-process audit ----
     def readFlag(n: String): String = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(base, n)), "UTF-8")
     Seq("phase4_sig", "phase4b_sig", "phase4c_sig", "phase5_ngram", "phase5_ivf")
@@ -177,7 +187,7 @@ object StoreContention {
     require(coldSig == readFlag("phase4b_sig_a"),
       s"two-process append chain diverged from a cold rebuild: " +
         s"$coldSig vs ${readFlag("phase4b_sig_a")}")
-    // no lock litter on any live-path store
+    // no lock litter on any multi-artifact store
     val livePaths = Seq(
       graft.operators.StarSchema.factServePath(corpusDir),
       graft.operators.Dedup.postingsServePath(corpusDir),
@@ -186,24 +196,21 @@ object StoreContention {
       require(!java.nio.file.Files.exists(ServingStore.lockPath(p)),
         s"build lock litter survived at $p")
     }
-    println("[contend] PASS: live-path fact/postings/ANN contention clean " +
+    println("[contend] PASS: multi-artifact fact/postings/ANN contention clean " +
       "(append chain == cold rebuild, compaction invariant, no lock litter)")
     spark.stop()
 
-    // ---- kill -9 crash injection at the unprove-before-mutate points ----
-    // each scenario: spawn a process that halts (137) INSIDE a compact
-    // swap window, then a FRESH recovery JVM (takeover after the lock
-    // goes stale) must serve results identical to the pre-crash state.
+    // ---- kill -9 crash injection at the protocol's commit point ----
+    // each scenario: spawn a process that halts (137) between writing a
+    // compaction's generation and stamping it, then a FRESH recovery JVM
+    // must serve results identical to the pre-crash state and take the
+    // dead holder's lock over (after it goes stale) to compact again.
     Seq("crashfact", "crashpostings", "crashann").foreach { mode =>
-      val c = spawn(mode, Seq(base), env = Map("GRAFT_CRASH_POINT" -> (mode match {
-        case "crashfact" => "fact.compact.midswap"
-        case "crashpostings" => "postings.compact.midswap"
-        case _ => "ann.compact.midswap"
-      })))
+      val c = spawn(mode, Seq(base), env = Map("GRAFT_CRASH_POINT" -> CrashPoints(mode)))
       val done = c.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
       val code = if (done) c.exitValue() else { c.destroyForcibly(); -1 }
       require(code == 137, s"$mode: expected halt(137) at the crash point, got $code")
-      println(s"[contend] $mode halted mid-swap as injected")
+      println(s"[contend] $mode halted before the commit as injected")
     }
     val r = spawn("recover", Seq(base))
     require(r.waitFor(20, java.util.concurrent.TimeUnit.MINUTES) && r.exitValue() == 0,
@@ -213,8 +220,12 @@ object StoreContention {
       readFlag("phase5_ivf_a")).mkString(";")
     require(recovered == expected,
       s"post-crash recovery diverged from pre-crash state:\n  got  $recovered\n  want $expected")
-    println("[contend] PASS: kill-9 at fact/postings/ANN mid-swap windows — " +
-      "unproven state rebuilt, results identical, locks taken over")
+    livePaths.foreach { p =>
+      require(!java.nio.file.Files.exists(ServingStore.lockPath(p)),
+        s"crashed holder's lock survived recovery at $p")
+    }
+    println("[contend] PASS: kill-9 at fact/postings/ANN commit points — " +
+      "stamped generations served, results identical, locks taken over")
   }
 
   // ------------------------------------------------------------ worker
@@ -283,7 +294,7 @@ object StoreContention {
     // b: odd). The append protocol's staleness proof requires the
     // exact stored fp, so the chain is sequenced by handshake files;
     // the LOCK correctness under two JVMs is what is under test (the
-    // whole append runs inside withBuildLock).
+    // whole append runs under the store's build lock).
     val appendRounds = 4
     serveAndCheck(spark, store, 200L)
     // both must finish the fp=200 ensure BEFORE any append: a straggler
@@ -324,10 +335,9 @@ object StoreContention {
     // generation (both processes race it; either's build is fine)
     serveAndCheck(spark, store, 300L)
 
-    // ------------------------------------------------ live-path phases
-    // (r15 verdict #2: the fact layout, posting index and ANN index
-    // mutate LIVE paths under the build lock — the very stores the r15
-    // locking sweep covered, never before exercised across two JVMs)
+    // ---------------------------------------- multi-artifact phases
+    // (the fact layout, posting index and ANN index: bucketed catalog
+    // registration, in-place appends and compaction across two JVMs)
     import graft.operators.{Dedup, Similarity, StarSchema}
     val corpus = base + "/corpus"
     def writeFlag(n: String, v: String): Unit =
@@ -370,35 +380,26 @@ object StoreContention {
     writeFlag(s"phase4b_sig_$name", starSig())
     handshake("phase4b")
     // phase 4c — compaction vs a live reader: `a` compacts while `b`
-    // polls the serve path. The documented contract: a reader mid-swap
-    // may fail LOUDLY (FileNotFound) but never serve wrong data — so
-    // `b` retries on failure and must converge to the identical sig.
+    // polls the serve path. The compaction writes a NEW generation and
+    // keeps the one `b` listed, so every poll must succeed (an exception
+    // fails the worker) and serve the pre-compaction content.
     if (name == "a") {
       StarSchema.compactFactLayout(spark, corpus)
       touch(flags.resolve("compact4_done"))
     } else {
+      val want = new String(java.nio.file.Files.readAllBytes(
+        flags.resolve(s"phase4b_sig_$name")), "UTF-8")
+      var polls = 0
       var done = false
       while (!done) {
-        try { starSig(); () }
-        catch { case scala.util.control.NonFatal(_) => Thread.sleep(100) }
+        val got = starSig()
+        require(got == want, s"reader saw $got during compaction, expected $want")
+        polls += 1
         done = java.nio.file.Files.exists(flags.resolve("compact4_done"))
       }
+      println(s"[contend] phase 4c: $polls reader polls during compaction, no failures")
     }
-    def sigWithRetry(): String = {
-      var out: Option[String] = None
-      var tries = 0
-      while (out.isEmpty) {
-        try out = Some(starSig())
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            tries += 1
-            require(tries < 100, s"serve never recovered after compaction: $e")
-            Thread.sleep(200)
-        }
-      }
-      out.get
-    }
-    writeFlag(s"phase4c_sig_$name", sigWithRetry())
+    writeFlag(s"phase4c_sig_$name", starSig())
     handshake("phase4c")
     // phase 5 — posting-index and ANN-index build races (cold stores,
     // both processes ensure concurrently; serve twice for stability)
@@ -417,22 +418,34 @@ object StoreContention {
 
   // ----------------------------------------------------------- recover
 
-  /** Fresh-JVM recovery after the injected kill -9s: shrink the lock
-    * staleness bound so the dead holders' locks age out, then serve all
-    * three crashed stores — each must detect its unproven state,
-    * take the stale lock over, rebuild, and return the pre-crash
-    * results (written for the driver to compare). */
+  /** Fresh-JVM recovery after the injected kill -9s: serve all three
+    * crashed stores — the crash left each one's previous generation
+    * stamped, so each must serve the pre-crash results without a lock.
+    * Then shrink the lock staleness bound so the dead holders' locks
+    * age out, compact every store again (taking each stale lock over)
+    * and require identical results (written for the driver to
+    * compare). */
   private def recover(base: String): Unit = {
     import graft.operators.{Dedup, Similarity, StarSchema}
     val spark = GraftSession.local("graft-contend-recover")
+    val corpus = base + "/corpus"
+    def sig(): String = {
+      val (n, h) = Golden.checksum(StarSchema.starJoinServed(spark, corpus))
+      val ngram = Dedup.ngramJaccardServe(spark, corpus).count()
+      val ivf = Similarity.knnIvfServe(spark, corpus).count()
+      s"$n|$h;$ngram;$ivf"
+    }
+    val served = sig()
     ServingStore.LockStaleMs = 3000
     Thread.sleep(4000)
-    val corpus = base + "/corpus"
-    val (n, h) = Golden.checksum(StarSchema.starJoinServed(spark, corpus))
-    val ngram = Dedup.ngramJaccardServe(spark, corpus).count()
-    val ivf = Similarity.knnIvfServe(spark, corpus).count()
+    StarSchema.compactFactLayout(spark, corpus)
+    Dedup.compactPostings(spark, corpus)
+    Similarity.compactIvf(spark, Similarity.ivfServePath(corpus))
+    val compacted = sig()
+    require(compacted == served,
+      s"compaction after the crash changed results: $compacted vs $served")
     java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_sig"),
-      s"$n|$h;$ngram;$ivf".getBytes("UTF-8"))
+      served.getBytes("UTF-8"))
     spark.stop()
   }
 }

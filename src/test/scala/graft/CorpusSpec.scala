@@ -525,12 +525,12 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a sidecar whose fingerprint no longer matches (an equal-row-count
     // corpus swap) must trigger a rebuild, and the rebuilt serve must
     // still equal the in-memory result
-    val (cents, n, Some(fp)) =
-      operators.Similarity.readIvfModelFull(spark, servePath): @unchecked
-    operators.Similarity.writeIvfModel(spark, servePath, cents, n, Some(fp + 1))
+    val Some((fp, gen)) =
+      operators.ServingStore.readSidecar(spark, "ivf", servePath): @unchecked
+    operators.ServingStore.writeSidecar(spark, servePath, fp + 1, gen)
     val rebuilt = resultSet(operators.Similarity.knnIvfServe(spark, sf))
     assert(rebuilt == direct, "post-rebuild serve diverged from in-memory IVF")
-    assert(operators.Similarity.readIvfModelFull(spark, servePath)._3.contains(fp),
+    assert(operators.ServingStore.readSidecar(spark, "ivf", servePath).map(_._1).contains(fp),
       "fingerprint mismatch did not trigger an index rebuild")
   }
 
@@ -574,8 +574,6 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       f.delete(); ()
     }
     val path = operators.Dedup.postingsServePath(sf)
-    val table = operators.Dedup.postingsTableName(sf)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     rmrf(new java.io.File(path)); rmrf(new java.io.File(path + "_model"))
     def resultSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -589,8 +587,9 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val warm = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(warm == direct, "warm serve diverged")
     assert(stampOf == stamp, "warm serve rewrote the posting index instead of reusing it")
-    // a NEW session loses the in-memory catalog but keeps the files: the
+    // a NEW process loses the in-memory catalog but keeps the files: the
     // serve path must re-register the existing generation, not rebuild it
+    val table = operators.Dedup.ensurePostings(spark, sf)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val reregistered = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(reregistered == direct, "re-registered serve diverged")
@@ -620,13 +619,15 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     base.write.mode("overwrite").parquet(tmp + "/documents.parquet")
     operators.Dedup.ensurePostings(spark, tmp)
-    // build the doc-stats sidecar pre-append so the append path must
-    // maintain it incrementally (a stale sidecar would rebuild instead)
+    // the doc-stats artifact is built with the generation, so the append
+    // path must maintain it incrementally (a stale one would rebuild)
     operators.Dedup.ensurePostingStats(spark, tmp)
     val path = operators.Dedup.postingsServePath(tmp)
+    def gen = operators.ServingStore.live(spark, "posting-index", path,
+      operators.Dedup.PostingsLayout).get
     // data files only: _SUCCESS markers (and their .crc shadows)
     // legitimately refresh on append
-    def stampOf = new java.io.File(path).listFiles
+    def stampOf = new java.io.File(gen("postings")).listFiles
       .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
       .map(f => f.getName -> f.lastModified).toMap
     val pre = stampOf
@@ -665,7 +666,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // advanced with the append, so this serve must NOT rebuild it) and
     // the index-served contamination screen equals the batch scan over
     // the full appended corpus
-    val statsFpPath = operators.Dedup.postingsStatsPath(tmp) + "_model"
+    val statsFpPath = path + "_model"
     val statsStamp = new java.io.File(statsFpPath).lastModified
     def screenOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) ->
@@ -675,6 +676,36 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "served screen over appended stats diverged from the batch scan")
     assert(new java.io.File(statsFpPath).lastModified == statsStamp,
       "serve after append rebuilt the doc-stats sidecar")
+  }
+
+  test("posting maintenance in one session: append and compaction serve full-corpus results") {
+    // regression: the session that built the posting index and ran
+    // compactPostings served q_contamination_delta from a relation whose
+    // cached file listing named deleted pre-compaction files
+    // (FILE_NOT_EXIST). Everything here runs in ONE session through
+    // SparkEntry.queries, so the interactive-lane child session serves.
+    val tmp = java.nio.file.Files.createTempDirectory("graftmaint").toString
+    val cold = java.nio.file.Files.createTempDirectory("graftmaintcold").toString
+    val docs = graft.Tables.documents(spark, sf)
+    docs.write.mode("overwrite").parquet(cold + "/documents.parquet")
+    docs.filter(col("doc_id") % 5 =!= 0)
+      .write.mode("overwrite").parquet(tmp + "/documents.parquet")
+    val delta = docs.filter(col("doc_id") % 5 === 0).localCheckpoint()
+    val names = Seq("q_contamination_delta", "q_dedup_ngram")
+    def construct(dir: String) = names.map(n => SparkEntry.queries(n)(spark, dir))
+    def serve(dir: String) = construct(dir).map(tools.Golden.checksum)
+    // the cold build over the full corpus is the reference
+    val want = serve(cold)
+    serve(tmp) // builds the posting index over the base corpus
+    val fp0 = operators.Similarity.corpusFingerprint(spark, tmp, "documents.parquet")
+    delta.write.mode("append").parquet(tmp + "/documents.parquet")
+    operators.Dedup.appendPostings(spark, tmp, delta, expectedFp = Some(fp0))
+    assert(serve(tmp) == want, "serve after the append diverged from a cold build")
+    val held = construct(tmp)
+    operators.Dedup.compactPostings(spark, tmp)
+    assert(serve(tmp) == want, "serve after the compaction diverged from a cold build")
+    assert(held.map(tools.Golden.checksum) == want,
+      "a frame constructed before the compaction no longer collects its results")
   }
 
   test("collapse serve: duplicate-heavy corpus equals the doc-level formulation exactly") {
@@ -860,10 +891,12 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(want.nonEmpty, "premise: the corpus has near-dup pairs at t=0.3")
     // crash state: rep dir exists but holds no committed data files;
     // fp sidecar still proves the generation
-    val repDir = new java.io.File(operators.Dedup.postingsRepPath(tmp))
+    val gen = operators.ServingStore.live(spark, "posting-index",
+      operators.Dedup.postingsServePath(tmp), operators.Dedup.PostingsLayout).get
+    val repDir = new java.io.File(gen("rep"))
     repDir.listFiles.filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
       .foreach(f => assert(f.delete(), s"could not empty $f"))
-    spark.sql(s"DROP TABLE IF EXISTS ${operators.Dedup.postingsRepTableName(tmp)}")
+    spark.sql(s"DROP TABLE IF EXISTS ${gen.table("rep")}")
     assert(pairSet(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)) == want,
       "a dataless rep dir served empty/wrong pairs instead of triggering a rebuild")
   }
@@ -879,7 +912,10 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     delta.write.mode("append").parquet(tmp + "/documents.parquet")
     operators.Dedup.appendPostings(spark, tmp, delta, expectedFp = Some(fp0))
     val path = operators.Dedup.postingsServePath(tmp)
-    def dataFiles = new java.io.File(path).listFiles
+    // the sidecar-named generation's posting table: compaction moves the
+    // stamp to a new generation, so the listing follows the sidecar
+    def dataFiles = new java.io.File(operators.ServingStore.live(spark, "posting-index", path,
+        operators.Dedup.PostingsLayout).get("postings")).listFiles
       .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
     assert(dataFiles.length > operators.Dedup.PostingsBuckets,
       "append did not fragment the buckets — the compaction premise is gone")
@@ -1467,7 +1503,8 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "warm PQ serve rewrote the generation instead of reusing it")
     // codes are bounded by the codebook size
     import org.apache.spark.sql.functions.{col, explode}
-    val bad = spark.read.parquet(servePath)
+    val bad = spark.read.parquet(operators.ServingStore.live(spark, "pq", servePath,
+        operators.Similarity.CodesParts).get("codes"))
       .select(explode(col("codes")).as("c"))
       .filter(col("c") < 0 || col("c") >= operators.Similarity.PqK).count()
     assert(bad == 0L, "PQ code out of [0, PqK)")
@@ -1483,7 +1520,10 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // build the generation over the base corpus
     operators.Similarity.knnIvfPqServe(spark, tmp).count()
     val indexPath = operators.Similarity.ivfPqServePath(tmp)
-    def dataFiles = new java.io.File(indexPath).listFiles
+    // the sidecar-named generation's inverted lists
+    def lists = operators.ServingStore.live(spark, "ivf-pq", indexPath,
+      operators.Similarity.IvfParts).get("lists")
+    def dataFiles = new java.io.File(lists).listFiles
       .filter(_.isDirectory) // cid= partition dirs
       .flatMap(d => d.listFiles.filterNot(f =>
         f.getName.startsWith("_") || f.getName.startsWith(".")))
@@ -1580,12 +1620,15 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     found.values.foreach(c => assert(c >= 0.45))
     assert(brute.nonEmpty, "degenerate ground truth")
     assert(found.nonEmpty, s"cluster blocking found none of ${brute.size} pairs")
-    // second call serves the persisted cell quantizer (no retrain):
-    // the sidecar files must be byte-stable across calls
-    val modelDir = new java.io.File(operators.Similarity.ivfModelPath(
-      operators.Similarity.semCellsServePath(sf)))
+    // second call serves the persisted cell quantizer (no retrain): the
+    // sidecar-named generation's model files must be byte-stable
+    def modelDir = new java.io.File(operators.ServingStore.live(spark, "sem-cells",
+      operators.Similarity.semCellsServePath(sf), operators.Similarity.SemCellParts).get("model"))
+    // serve the quantizer directly: a fresh assignment store skips it
+    operators.Similarity.serveSemCells(spark, sf)
     val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
     operators.Similarity.embeddingDedupCells(spark, sf).count()
+    operators.Similarity.serveSemCells(spark, sf)
     assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
       "second call retrained the cell quantizer")
   }
@@ -1658,18 +1701,21 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val indexPath = tmp + "/ivf_index"
     operators.Similarity.writeIvfIndexOf(spark, base, indexPath)
     operators.Similarity.appendIvfIndex(spark, delta, indexPath)
-    def cellFiles = new java.io.File(indexPath).listFiles
+    // the sidecar-named generation (compaction moves the stamp)
+    def gen = operators.ServingStore.live(spark, "ivf", indexPath,
+      operators.Similarity.IvfParts).get
+    def cellFiles = new java.io.File(gen("lists")).listFiles
       .filter(f => f.isDirectory && f.getName.startsWith("cid="))
       .map(d => d.getName -> d.listFiles.filterNot(f =>
         f.getName.startsWith("_") || f.getName.startsWith(".")).length).toMap
     assert(cellFiles.values.exists(_ > 1),
       "append did not fragment any cell — the compaction premise is gone")
     // the index must hold the full union before and after
-    def contents = spark.read.parquet(indexPath)
+    def contents = spark.read.parquet(gen("lists"))
       .select("vec_id", "cid").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     val before = contents
-    val modelDir = new java.io.File(operators.Similarity.ivfModelPath(indexPath))
+    def modelDir = new java.io.File(gen("model"))
     val modelStamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
     operators.Similarity.compactIvf(spark, indexPath)
     val filesAfter = cellFiles
@@ -1694,7 +1740,10 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       delta.select(col("vec_id"), col("embedding").as("vec")),
       expectedFp = Some(fp0))
     val indexPath = operators.Similarity.ivfPqServePath(tmp)
-    def cellFiles = new java.io.File(indexPath).listFiles
+    // the sidecar-named generation (compaction moves the stamp)
+    def gen = operators.ServingStore.live(spark, "ivf-pq", indexPath,
+      operators.Similarity.IvfParts).get
+    def cellFiles = new java.io.File(gen("lists")).listFiles
       .filter(f => f.isDirectory && f.getName.startsWith("cid="))
       .map(d => d.getName -> d.listFiles.filterNot(f =>
         f.getName.startsWith("_") || f.getName.startsWith(".")).length).toMap
@@ -1704,7 +1753,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("query_id", "neighbor_id", "cosine", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val before = rows(operators.Similarity.knnIvfPqServe(spark, tmp))
-    val modelDir = new java.io.File(operators.Similarity.ivfModelPath(indexPath))
+    def modelDir = new java.io.File(gen("model"))
     val modelStamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
     operators.Similarity.compactIvfPq(spark, tmp)
     val after = cellFiles
@@ -1715,11 +1764,11 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == modelStamp,
       "compaction rewrote the model sidecar")
     // a subsequent serve reuses the compacted generation (no rebuild)
-    val stamp = new java.io.File(indexPath).listFiles
+    val stamp = new java.io.File(gen("lists")).listFiles
       .filter(_.isDirectory).flatMap(_.listFiles)
       .map(f => f.getPath -> f.lastModified).toMap
     operators.Similarity.knnIvfPqServe(spark, tmp).count()
-    assert(new java.io.File(indexPath).listFiles
+    assert(new java.io.File(gen("lists")).listFiles
       .filter(_.isDirectory).flatMap(_.listFiles)
       .map(f => f.getPath -> f.lastModified).toMap == stamp,
       "serve after compaction rebuilt the generation")
@@ -1968,15 +2017,17 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(warm == coldRows, "warm IVFPQ serve diverged")
     assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
       "warm IVFPQ serve rewrote the generation")
-    // rebuild path: overwriting the sidecar (books rows lost, stale fp)
-    // must fail the read probe and trigger a full rebuild that again
-    // equals the original results
-    val (cents, n, Some(fp)) =
-      operators.Similarity.readIvfModelFull(spark, servePath): @unchecked
-    operators.Similarity.writeIvfModel(spark, servePath, cents, n, Some(fp + 1))
+    // rebuild path: overwriting the generation's model (books rows
+    // lost) and the sidecar (stale fp) must fail the read probe and
+    // trigger a full rebuild that again equals the original results
+    val (cents, n) = operators.Similarity.readIvfModel(spark, servePath)
+    val Some((fp, gen)) =
+      operators.ServingStore.readSidecar(spark, "ivf-pq", servePath): @unchecked
+    operators.Similarity.writeIvfModel(spark, gen + "/model", cents, n)
+    operators.ServingStore.writeSidecar(spark, servePath, fp + 1, gen)
     val rebuilt = rows(operators.Similarity.knnIvfPqServe(spark, sf))
     assert(rebuilt == coldRows, "post-rebuild IVFPQ serve diverged")
-    assert(operators.Similarity.readIvfPqModels(spark, servePath)._4.contains(fp),
+    assert(operators.ServingStore.readSidecar(spark, "ivf-pq", servePath).map(_._1).contains(fp),
       "sidecar corruption did not trigger a rebuild")
   }
 

@@ -17,6 +17,14 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  private def deleteTree(p: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete(); ()
+    }
+    rm(new java.io.File(p))
+  }
+
   test("native cosine matches the higher-order-function formulation") {
     GraftFunctions.ensureRegistered(spark)
     val df = Tables.embeddings(spark, sf).limit(50)
@@ -1153,7 +1161,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
         () => rows(operators.Events.funnel(spark, sf))),
       ("resolved-enrichment", operators.AsOf.enrichServePath(sf),
         () => rows(operators.AsOf.enrichAttach(spark, sf))),
-      ("lm-stats", operators.Curation.lmBcPath(sf),
+      ("lm-stats", operators.Curation.lmServePath(sf),
         () => rows(operators.Curation.lmScore(spark, sf))))
     cases.foreach { case (what, path, run) =>
       val first = run()
@@ -1208,7 +1216,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     // unreadable sidecar: the live generation is UNKNOWN — the rebuild
     // must SKIP pruning rather than guess (r11 review finding)
     val before = genDirs
-    operators.Dedup.deleteTree(store + "_model")
+    deleteTree(store + "_model")
     operators.ServingStore.ensure(spark, "t", store, 9L)(buildOf(Seq((1L, "z"))))
     assert(before.subsetOf(genDirs),
       "unreadable sidecar pruned generations it could not prove dead")
@@ -2750,15 +2758,17 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fpBefore = StarSchema.factFingerprint(spark, dirA)
     StarSchema.compactFactLayout(spark, dirA)
     val layoutPath = StarSchema.factServePath(dirA)
+    // the sidecar-named generation: compaction moves the stamp to it
+    val gen = operators.ServingStore.live(spark, "fact-layout", layoutPath,
+      StarSchema.FactParts).get
     Seq("lirev", "orders").foreach { sub =>
-      val files = new java.io.File(s"$layoutPath/$sub")
+      val files = new java.io.File(gen(sub))
         .listFiles.count(_.getName.endsWith(".parquet"))
       assert(files == StarSchema.FactBuckets,
         s"$sub not compacted to one file per bucket: $files files")
     }
     assert(sig(dirA) == before, "compaction changed query results")
-    assert(operators.Similarity.readSidecarRows(spark, layoutPath + "_model")(0)
-      .getLong(0) == fpBefore, "compaction changed the fingerprint")
+    assert(gen.fp == fpBefore, "compaction changed the fingerprint")
     // LEGACY-SHAPE refusal (r16 review): a sidecar without the layout
     // version stamp marks a layout whose table set predates this
     // engine — appending would parquet-CREATE the newer tables with
@@ -2776,7 +2786,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fact layout janitor: prunes dead-corpus layouts, keeps live, skips unproven") {
-    import operators.{Dedup, StarSchema}
+    import operators.StarSchema
     def mkCorpus(): String = {
       val d = java.nio.file.Files.createTempDirectory("graftjanitor").toString
       Seq("customer", "nation", "region", "part", "orders", "lineitem").foreach { t =>
@@ -2791,7 +2801,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val liveSig = tools.Golden.checksum(StarSchema.starJoinServed(spark, live))
     val liveName = new java.io.File(StarSchema.factServePath(live)).getName
     val deadName = new java.io.File(StarSchema.factServePath(dead)).getName
-    Dedup.deleteTree(dead) // the corpus vanishes; its layout is now orphaned
+    deleteTree(dead) // the corpus vanishes; its layout is now orphaned
     val report = StarSchema.pruneFactLayouts(spark).toMap
     assert(report(deadName).startsWith("pruned"), s"dead layout: ${report.get(deadName)}")
     assert(report(liveName).startsWith("kept"), s"live layout: ${report.get(liveName)}")
@@ -2812,7 +2822,43 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r3 = StarSchema.pruneFactLayouts(spark).toMap
       assert(r3(fake.getName).startsWith("skipped"), s"mid-build dir: ${r3.get(fake.getName)}")
       assert(fake.exists(), "janitor deleted an unproven (possibly mid-build) layout")
-    } finally { Dedup.deleteTree(fake.getPath) }
+    } finally { deleteTree(fake.getPath) }
+  }
+
+  test("fact layout: concurrent first construction in a fresh catalog never collides") {
+    // regression: two threads constructing fact-layout readers at once
+    // over a warm layout whose tables a fresh process has not registered
+    // yet both created the same catalog table — TABLE_OR_VIEW_ALREADY_EXISTS
+    val dir = java.nio.file.Files.createTempDirectory("graftfactconc").toString
+    Seq("customer", "nation", "region", "part", "orders", "lineitem").foreach { t =>
+      spark.read.parquet(s"$sf/$t.parquet").write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    val names = Seq("q_ml_extract", "q_star_join")
+    // warm layout + the sequential reference
+    val want = names.map(n => tools.Golden.checksum(SparkEntry.queries(n)(spark, dir)))
+    val layout = new java.io.File(operators.StarSchema.factServePath(dir)).getAbsolutePath
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog
+    (1 to 6).foreach { round =>
+      // a fresh process's view: the layout is on disk, its tables are not
+      // in the catalog, and no session has memoized anything over it
+      catalog.listTables("default").filter { t =>
+        !catalog.isTempView(t) &&
+          catalog.getTableMetadata(t).location.getPath.startsWith(layout)
+      }.foreach(catalog.dropTable(_, ignoreIfNotExists = true, purge = false))
+      val fresh = spark.newSession()
+      val barrier = new java.util.concurrent.CyclicBarrier(names.size)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+      try {
+        val frames = names.map { n =>
+          pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+            def call() = { barrier.await(); SparkEntry.queries(n)(fresh, dir) }
+          })
+        }.map(_.get())
+        assert(frames.map(tools.Golden.checksum) == want,
+          s"round $round: concurrent construction diverged from sequential")
+      } finally pool.shutdown()
+    }
   }
 
   test("fact sink: streamed order batches equal a cold rebuild, landing race repairs") {
